@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan inspector: prints `.explain("formatted")` for the named declared
-  * queries (or all of them) — the review loop for shuffle counts, exchange
+/** Plan inspector: runs each named declared query (or all of them), then
+  * prints `.explain("formatted")` of the QueryExecution that ran — the
+  * final adaptive plan (`isFinalPlan=true`) with AQE's runtime choices,
+  * not the initial one. The review loop for shuffle counts, exchange
   * reuse, pushdown, and codegen coverage.
   *
   * Usage: tools/run_main.sh graft.Explain <sfDir> [query ...]
@@ -13,18 +13,12 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start(logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      df.queryExecution.toRdd.foreach(_ => ())
+      df.explain("formatted")
     }
     spark.stop()
   }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   *
   * OPT-IN by construction: the layer is active only when
   * `-Dgraft.model.cache=<dir>` (or `GRAFT_MODEL_CACHE`) is set —
-  * [[graft.Bench]] and [[graft.Verify]] set it to `target/graft-models`;
+  * [[graft.Bench]] (except in cold mode, which refuses a set root) and
+  * [[graft.Verify]] set it to `target/graft-models`;
   * specs never do, so determinism/retrain pins keep exercising real
   * training (sbt forks both `run` and `test`, so the property cannot leak
   * between them).

@@ -56,9 +56,10 @@ object GroupC {
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
     // r22: a Tables.fanned repartition was A/B'd here and REVERTED —
     // the kernel is cheap enough that the extra exchange + 32-task
-    // scheduling cost more than the serial explode saves (BenchOne
-    // min-of-5 at c32: d30 2.40 bare vs 5.21 fanned; the win sites are
-    // the heavy regex chains, see d100/csvRoundTrip)
+    // scheduling cost more than the serial explode saves (isolated
+    // min-of-5 at c32: d30 2.40 bare vs 5.21 fanned, OPTIMIZATION_r22.md
+    // "shingles-fan"; the win sites are the heavy regex chains, see
+    // d100/csvRoundTrip)
     shinglesOf(Tables(spark, sfDir, "documents"))
 
   /** [[shingles]] over an explicit (possibly pre-filtered) documents

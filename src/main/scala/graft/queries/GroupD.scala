@@ -430,8 +430,8 @@ object GroupD {
     * vectors in PipelineOpsSpec), where the identical plan shape scales
     * linearly in documents.
     *
-    * r22 parameter sweep (TuneD10, the r21 verdict's task 6 — "fewer
-    * tables × wider bands at equal recall"): measured NEGATIVE. At
+    * r22 parameter sweep (OPTIMIZATION_r22.md, "d10_dedup_embedding_lsh"
+    * — "fewer tables × wider bands at equal recall"): measured NEGATIVE. At
     * sf0.1, 24×3 is the UNIQUE config in the sweep whose drop set
     * equals d9's exact answer (129 survivors); every cheaper config
     * loses drops (16×3 → 132 survivors at 1.49 s, 12×3 → 134, 12×4 →

@@ -10,10 +10,11 @@ import graft.sources.{CsvCatalog, CsvDialect, CsvWrite}
 object Tables {
   /** Per-JVM parquet schema memo (r22, the per-query-floor fix): a bare
     * `spark.read.parquet(path)` re-infers the schema on EVERY call —
-    * a footer read plus relation setup measured at ~0.08 s per call on
-    * this box (ProfileMicro), paid by every query invocation of every
-    * bench pass. Production reads resolve the schema from a catalog /
-    * metastore instead of re-inferring per query; this memo is that
+    * a footer read plus relation setup measured at ~0.08 s per call
+    * (OPTIMIZATION_r22.md, "Attribution"), paid by every query
+    * invocation of every bench pass. Production reads resolve the
+    * schema from a catalog / metastore instead of re-inferring per
+    * query; this memo is that
     * catalog: METADATA only (a StructType per path — never rows), keyed
     * by the full file path, populated from the first real inference in
     * this JVM. The fixtures are immutable within a process, and the
@@ -73,16 +74,13 @@ object Tables {
 
   /** [[fanned]] with the table's registered key. */
   def fanned(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    fanned(spark, sfDir, name, fanKey(name))
-
-  /** A/B toggle for the fan-out (dev measurement only): set
-    * SPARK_GRAFT_NO_FAN=1 to make [[fanned]] a pass-through. */
-  private val noFan = sys.env.get("SPARK_GRAFT_NO_FAN").contains("1")
+    fanned(spark, sfDir, name, fanKey.getOrElse(name,
+      throw new IllegalArgumentException(
+        s"table '$name' has no key in Tables.fanKey; register one there")))
 
   def fanned(spark: SparkSession, sfDir: String, name: String,
              key: String): DataFrame = {
     val df = apply(spark, sfDir, name)
-    if (noFan) return df
     val p = spark.sparkContext.defaultParallelism
     val path = s"$sfDir/$name.parquet"
     var parts = scanPartsMemo.get(path)

@@ -71,6 +71,10 @@ final case class CsvDialect(
     "ignoreLeadingWhiteSpace"   -> "true",
     "ignoreTrailingWhiteSpace"  -> "true",
     "inferSchema"               -> "false",
+    // Spark's pruned CSV scan judges a row only by the columns the query
+    // reads, so a subset read would keep defective rows under Drop and
+    // not throw under Fail; parse every column so the mode sees them all
+    "columnPruning"             -> "false",
   )
 
   /** Options for the write path. Reference quotes every non-NULL value

@@ -5,24 +5,16 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM (suites run
-  * sequentially in sbt's single forked process). Mirrors Verify/Bench
-  * session config, including the nanosAsLong flag events reads require.
+  * sequentially in sbt's single forked process), built by the mains'
+  * factory [[Session]] at 2 threads, plus a private warehouse dir.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
+  lazy val spark: SparkSession = Session.start(
+    Session.builder(2)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+        Files.createTempDirectory("graft-warehouse").toString),
+    logLevel = "ERROR")
 
   /** Write `content` as `<dir>/<name>` (UTF-8 unless bytes given). */
   def csvFile(dir: Path, name: String, content: String,

@@ -78,6 +78,14 @@ class JobRunnerSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
+      // the listener bus is async and delivers an earlier test's action
+      // (e.g. its count()) to a listener registered after it ran: flush the
+      // bus with a marker action, then start from an empty list
+      spark.range(1).collect()
+      val flushBy = System.currentTimeMillis() + 10000
+      while (!funcNames.contains("collect") && System.currentTimeMillis() < flushBy)
+        Thread.sleep(50)
+      funcNames.clear()
       val res = Job.run(spark, cfg(src, dest), mappings, sleep = noSleep)
       assert(res.ok)
       assert(res.results.map(_.rowsWritten) == Seq(3L, 2L))
